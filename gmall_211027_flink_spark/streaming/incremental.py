@@ -24,11 +24,11 @@ either.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gmall_211027_flink_spark.streaming.sinks import EpochCommit
 
 # op -> (partial expr builder, merge expr builder)
 _MERGE = {
@@ -58,19 +58,9 @@ class IncrementalAggStore:
             if op not in _MERGE:
                 raise ValueError(f"{name}: unmergeable op {op!r} — "
                                  f"decompose it (avg = sum/count)")
-
-    # epoch marker: same replay-guard scheme as ParquetUpsertSink /
-    # the SCD2 merge — merging a re-delivered batch would double-count
-    @property
-    def _marker(self) -> str:
-        return f"{self.path}._epoch"
-
-    def _last_epoch(self) -> int:
-        try:
-            with open(self._marker) as fh:
-                return int(fh.read().strip())
-        except (OSError, ValueError):
-            return -1
+        # merging a re-delivered batch would double-count, so every
+        # commit goes through the epoch fence
+        self._commit = EpochCommit(self.path)
 
     def _partial(self, batch: DataFrame) -> DataFrame:
         aggs = [_MERGE[op][0](col).alias(name)
@@ -78,9 +68,7 @@ class IncrementalAggStore:
         return batch.groupBy(*self.key_cols).agg(*aggs)
 
     def write_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= self._last_epoch():
-            return
-        if batch.isEmpty():
+        if not self._commit.begin(epoch_id) or batch.isEmpty():
             return
         spark = batch.sparkSession
         part = self._partial(batch)
@@ -101,18 +89,8 @@ class IncrementalAggStore:
             merged = joined.select(*keys, *merged_cols)
         else:
             merged = part
-        tmp = f"{self.path}._tmp-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(self.path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        m = self._marker + ".tmp"
-        with open(m, "w") as fh:
-            fh.write(str(epoch_id))
-        os.replace(m, self._marker)
-
-    def foreach_batch(self):
-        return self.write_batch
+        self._commit.replace(merged, self.path)
+        self._commit.commit(epoch_id)
 
     def read(self, spark) -> DataFrame:
         return spark.read.parquet(self.path)
@@ -121,7 +99,7 @@ class IncrementalAggStore:
 def run_incremental_agg(stream: DataFrame, store: IncrementalAggStore,
                         checkpoint: str) -> "object":
     return (stream.writeStream
-            .foreachBatch(store.foreach_batch())
+            .foreachBatch(store.write_batch)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start())

@@ -27,13 +27,16 @@ for O(batch) commits at a 1000x store-to-batch ratio.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gmall_211027_flink_spark.operators.windows import scd2_versions
+from gmall_211027_flink_spark.streaming.sinks import EpochCommit
 
-# store schema: pk bigint, status string, eff_from ts, eff_to ts,
-# is_current int
+STORE_SCHEMA = ("pk bigint, status string, eff_from timestamp, "
+                "eff_to timestamp, is_current int")
 
 
 def scd2_merge_batch(store: DataFrame, batch: DataFrame) -> DataFrame:
@@ -69,46 +72,28 @@ def run_scd2_stream(changelog_stream: DataFrame, store_path: str,
     """Wire a (pk, ts, seq, status) stream into a parquet SCD2 store via
     foreachBatch. Returns the StreamingQuery (availableNow callers wait
     on it)."""
-
-    import os
-
-    marker = store_path + "._epoch"
-
-    def _last_epoch() -> int:
-        try:
-            with open(marker) as fh:
-                return int(fh.read().strip())
-        except (OSError, ValueError):
-            return -1
+    commit = EpochCommit(store_path)
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
+        # Replay guard: the merge is NOT idempotent — re-applying a
+        # committed batch would feed already-folded events back through
+        # the collapse against the post-merge open rows and corrupt
+        # version order. foreachBatch re-delivers the same epoch_id
+        # after a crash; skip it before running any Spark job.
+        if not commit.begin(epoch_id) or batch_df.isEmpty():
+            return
         spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        # Replay guard (same scheme as ParquetUpsertSink): the merge is
-        # NOT idempotent — re-applying a committed batch would feed
-        # already-folded events back through the collapse against the
-        # post-merge open rows and corrupt version order. foreachBatch
-        # re-delivers the same epoch_id after a crash; skip it.
-        if epoch_id <= _last_epoch():
-            return
-        try:
-            store = spark.read.parquet(store_path)
-        except Exception:
-            store = spark.createDataFrame(
-                [], "pk bigint, status string, eff_from timestamp, "
-                    "eff_to timestamp, is_current int")
-        new_store = scd2_merge_batch(store, batch_df)
-        # rewrite-on-commit for the test store; production uses the
-        # bucketed O(batch) upsert layout (module docstring)
-        tmp = store_path + "._staged"
-        new_store.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(store_path)
-        tmp_marker = marker + ".tmp"
-        with open(tmp_marker, "w") as fh:
-            fh.write(str(epoch_id))
-        os.replace(tmp_marker, marker)
+        # only a missing store is empty: an unreadable one must fail the
+        # query, not be overwritten by this one batch
+        if os.path.exists(commit.path):
+            store = spark.read.parquet(commit.path)
+        else:
+            store = spark.createDataFrame([], STORE_SCHEMA)
+        # the merge recomputes only the batch's keys, but the commit
+        # still rewrites the whole store directory: bucketing it as the
+        # upsert sink does would make the commit O(batch) as well
+        commit.replace(scd2_merge_batch(store, batch_df), commit.path)
+        commit.commit(epoch_id)
 
     return (changelog_stream.writeStream
             .foreachBatch(merge)

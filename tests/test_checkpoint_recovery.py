@@ -98,13 +98,14 @@ def test_foreachbatch_upsert_restart_processes_each_row_once(spark, tmp_path):
         (src / name).write_text("\n".join(
             json.dumps({"k": k, "ts": ts, "v": v}) for k, ts, v in rows))
 
-    from gmall_211027_flink_spark.streaming.sinks import ParquetUpsertSink
+    from gmall_211027_flink_spark.streaming.sinks import (
+        EpochCommit, ParquetUpsertSink)
     sink = ParquetUpsertSink(store, ["k"], "ts")
 
     def run():
         q = (spark.readStream.schema(schema)
              .option("maxFilesPerTrigger", 1).json(str(src))
-             .writeStream.foreachBatch(sink.foreach_batch())
+             .writeStream.foreachBatch(sink.write_batch)
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
         q.awaitTermination(300)
@@ -121,4 +122,4 @@ def test_foreachbatch_upsert_restart_processes_each_row_once(spark, tmp_path):
     rows = {r["k"]: r["v"] for r in sink.read(spark).collect()}
     assert rows == {1: "a2", 2: "b2", 3: "c1", 4: "d1"}
     # epoch marker advanced past the first run's batches
-    assert sink._last_epoch() >= 2
+    assert EpochCommit(store).last_epoch() >= 2

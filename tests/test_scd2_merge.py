@@ -124,3 +124,29 @@ def test_scd2_stream_replayed_epoch_is_noop(spark, tmp_path):
     q2.awaitTermination(300)
     after = _fmt(spark.read.parquet(store_path))
     assert after == before
+
+
+def test_scd2_stream_unreadable_store_fails_untouched(spark, tmp_path):
+    """A store that exists but cannot be read is an error, not an empty
+    store: the query must fail instead of overwriting the version history
+    with one batch."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from gmall_211027_flink_spark.streaming.scd2 import run_scd2_stream
+
+    log_dir = str(tmp_path / "log")
+    _log_df(spark, [(1, _T(2024, 1, 1), 1, "A")]).write.parquet(log_dir)
+    stream = (spark.readStream
+              .schema("pk bigint, ts timestamp, seq int, status string")
+              .parquet(log_dir))
+    store = tmp_path / "store"
+    store.mkdir()
+    junk = store / "part-0.parquet"
+    junk.write_bytes(b"not parquet")
+
+    q = run_scd2_stream(stream, str(store), str(tmp_path / "ckpt"))
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(300)
+    assert [p.name for p in store.iterdir()] == ["part-0.parquet"]
+    assert junk.read_bytes() == b"not parquet"

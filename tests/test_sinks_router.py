@@ -2,11 +2,22 @@
 
 from __future__ import annotations
 
+import os
+from datetime import datetime
+
+import pytest
+
 from gmall_211027_flink_spark.sources.cdc import parse_cdc
 from gmall_211027_flink_spark.streaming.dim_router import (
     TableProcess, route_batch,
 )
-from gmall_211027_flink_spark.streaming.sinks import ParquetUpsertSink
+from gmall_211027_flink_spark.streaming.incremental import (
+    IncrementalAggStore,
+)
+from gmall_211027_flink_spark.streaming.scd2 import run_scd2_stream
+from gmall_211027_flink_spark.streaming.sinks import (
+    EpochCommit, ParquetUpsertSink,
+)
 
 
 def test_upsert_sink_last_wins(spark, tmp_path):
@@ -109,29 +120,94 @@ def test_bucketed_upsert_rewrites_only_affected_buckets(spark, tmp_path):
     assert len(rows) == 40 and rows[7] == "updated"
 
 
-def test_crashed_swap_orphans_never_read_back(spark, tmp_path):
+def _upsert_store(spark, tmp_path, path):
+    sink = ParquetUpsertSink(path, ["id"], "ts", num_buckets=4)
+
+    def write(ids, epoch):
+        sink.write_batch(spark.createDataFrame(
+            [(i, epoch, "v") for i in ids], "id int, ts int, v string"), epoch)
+    return write, lambda: {r["id"] for r in sink.read(spark).collect()}
+
+
+def _agg_store(spark, tmp_path, path):
+    store = IncrementalAggStore(path, ["id"], {"n": ("count", None)})
+
+    def write(ids, epoch):
+        store.write_batch(
+            spark.createDataFrame([(i,) for i in ids], "id int"), epoch)
+    return write, lambda: {r["id"] for r in store.read(spark).collect()}
+
+
+def _scd2_store(spark, tmp_path, path):
+    schema = "pk bigint, ts timestamp, seq int, status string"
+    log_dir = str(tmp_path / "log")
+    ckpt = str(tmp_path / "ckpt")
+
+    def write(ids, epoch):
+        # each drain of the same checkpoint is the next epoch
+        spark.createDataFrame(
+            [(i, datetime(2024, 1, 1 + epoch), 0, "A") for i in ids],
+            schema).write.mode("append").parquet(log_dir)
+        q = run_scd2_stream(
+            spark.readStream.schema(schema).parquet(log_dir), path, ckpt)
+        q.awaitTermination(300)
+    return write, lambda: {
+        r["pk"] for r in spark.read.parquet(path).collect()}
+
+
+STORES = pytest.mark.parametrize(
+    "make_store", [_upsert_store, _agg_store, _scd2_store],
+    ids=["ParquetUpsertSink", "IncrementalAggStore", "run_scd2_stream"])
+
+
+def _marker(path):
+    with open(f"{path}._epoch") as fh:
+        return fh.read()
+
+
+@STORES
+def test_crashed_swap_orphans_never_read_back(spark, tmp_path, make_store):
     """A crash between the staged parquet write and the rename must not
     leak rows: staging lives OUTSIDE the store path, and leftovers are
     swept on the next write (ADVICE r1: orphan tmp/old dirs inside
-    self.path were read back as live rows)."""
-    import os
-
+    self.path were read back as live rows). The default-tag marker is
+    the bare epoch id."""
     path = str(tmp_path / "crash_store")
-    sink = ParquetUpsertSink(path, ["id"], "ts", num_buckets=4)
-    sink.write_batch(spark.createDataFrame(
-        [(1, 0, "a"), (2, 0, "b")], "id int, ts int, v string"), 0)
+    write, read_ids = make_store(spark, tmp_path, path)
+    write([1, 2], 0)
+    assert _marker(path) == "0"
 
     # simulate a crash mid-swap: an orphan staged write that never renamed
-    orphan = os.path.join(sink._staging_root, "tmp-deadbeef")
-    spark.createDataFrame([(99, 9, "ghost")], "id int, ts int, v string") \
+    orphan = os.path.join(EpochCommit(path).staging, "tmp-deadbeef")
+    spark.createDataFrame([(99,)], "id int") \
         .write.mode("overwrite").parquet(orphan)
-    assert {r["id"] for r in sink.read(spark).collect()} == {1, 2}
+    assert read_ids() == {1, 2}
 
     # next write sweeps the orphan
-    sink.write_batch(spark.createDataFrame(
-        [(3, 1, "c")], "id int, ts int, v string"), 1)
+    write([3], 1)
     assert not os.path.exists(orphan)
-    assert {r["id"] for r in sink.read(spark).collect()} == {1, 2, 3}
+    assert read_ids() == {1, 2, 3}
+    assert _marker(path) == "1"
+
+
+@STORES
+def test_crash_between_swap_renames_restores_displaced_dir(
+        spark, tmp_path, make_store):
+    """A crash after the live directory moved aside but before the staged
+    copy moved in leaves the target missing: the next commit must put
+    the displaced copy back, not sweep it with the staging leftovers."""
+    path = str(tmp_path / "store")
+    write, read_ids = make_store(spark, tmp_path, path)
+    write(range(20), 0)
+    buckets = sorted(d for d in os.listdir(path) if d.startswith("bucket="))
+    target = os.path.join(path, buckets[0]) if buckets else path
+    staging = EpochCommit(path).staging
+    os.makedirs(staging, exist_ok=True)
+    os.rename(target, os.path.join(
+        staging, "old-" + os.path.relpath(target, path)))
+
+    write([100], 1)
+    assert read_ids() == set(range(20)) | {100}
 
 
 def test_epoch_marker_scoped_to_run_tag(spark, tmp_path):
@@ -182,6 +258,12 @@ def test_observe_metrics_surface_in_progress(spark, tmp_path):
     assert observed[0]["max_first_col"] == 6
 
 
+def test_upsert_sink_rejects_unbucketed_layout():
+    for buckets in (None, 0):
+        with pytest.raises(ValueError):
+            ParquetUpsertSink("unused", ["id"], "ts", num_buckets=buckets)
+
+
 def test_upsert_sink_delete_tombstones(spark, tmp_path):
     """op_col delete semantics (reference DimSinkFunction's Maxwell
     delete path): last-wins per key INCLUDING deletes — a key whose
@@ -189,7 +271,7 @@ def test_upsert_sink_delete_tombstones(spark, tmp_path):
     across batches reinserts; deleting an absent key is a no-op."""
     from gmall_211027_flink_spark.streaming.sinks import ParquetUpsertSink
 
-    for buckets in (None, 4):
+    for buckets in (1, 4):
         store = str(tmp_path / f"dim_{buckets}")
         sink = ParquetUpsertSink(store, ["id"], "ts", num_buckets=buckets,
                                  op_col="op")
